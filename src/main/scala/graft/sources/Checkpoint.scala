@@ -33,19 +33,8 @@ object Checkpoint {
     val p = path(root, tf)
     val fs = p.getFileSystem(hadoopConf())
     if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt =
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          var n = in.read(buf)
-          while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          bytes.toString("UTF-8")
-        } finally in.close()
-      """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toLong).toMap
-    }
+    else """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(SmallFile.read(fs, p))
+      .map(m => m.group(1) -> m.group(2).toLong).toMap
   }
 
   def write(root: String, tf: String, next: Map[String, Long]): Unit = {
@@ -53,8 +42,7 @@ object Checkpoint {
     val fs = p.getFileSystem(hadoopConf())
     val json = next.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}")
-    val out = fs.create(p, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    SmallFile.write(fs, p, json.getBytes("UTF-8"))
   }
 
   /** Next checkpoint from a derived frame: one past the max complete bucket

@@ -141,26 +141,16 @@ object Lake {
       .mkString("[", ",", "]")
     val json = s"""{"schema":$fields,"n_rows":${df.count()}}"""
     val path = new org.apache.hadoop.fs.Path(root, "_meta.json")
-    val fs = path.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    val out = fs.create(path, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    SmallFile.write(
+      path.getFileSystem(df.sparkSession.sessionState.newHadoopConf()),
+      path, json.getBytes("UTF-8"))
   }
 
   /** Read `_meta.json` back (Hadoop FS — works on any supported scheme). */
   def readMeta(spark: SparkSession, root: String): Option[String] = {
     val path = new org.apache.hadoop.fs.Path(root, "_meta.json")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) None
-    else {
-      val in = fs.open(path)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(bytes.toString("UTF-8"))
-      } finally in.close()
-    }
+    if (!fs.exists(path)) None else Some(SmallFile.read(fs, path))
   }
 
   /** Composite lake health report — the end-to-end shape of the reference's

@@ -42,8 +42,7 @@ class AsOfLakeSpec extends SparkTestBase {
   }
 
   test("partitioned lake write prunes partitions and compacts to one file each") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "lake").toString
+    val root = withTempDir("lake")
     val bars = Seq(
       ("A", 1704067200000L, 1.0), ("A", 1706745600000L, 2.0),
       ("B", 1704067200000L, 3.0))
@@ -63,8 +62,7 @@ class AsOfLakeSpec extends SparkTestBase {
   }
 
   test("writeShards: one sorted part per shard dir, pack order preserved") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "shards").toString
+    val root = withTempDir("shards")
     val docs = (0 until 40).map(i => (i.toLong, ("tok " * (i % 5 + 1)).trim))
       .toDF("doc_id", "text")
     val packed = graft.llm.TextAnalysis.packShards(docs, tokensPerPack = 6L,
@@ -112,8 +110,7 @@ class AsOfLakeSpec extends SparkTestBase {
   test("checkpoint round-trip and resume semantics") {
     import graft.operators.TfAggregate
     import graft.sources.Checkpoint
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ckpt").toString
+    val root = withTempDir("ckpt")
     val bars = Seq(
       ("A", 0L, 1.0, 1.0, 1.0, 1.0, 1.0, 1L),
       ("A", 60000L, 1.0, 1.0, 1.0, 1.0, 1.0, 1L),
@@ -130,8 +127,7 @@ class AsOfLakeSpec extends SparkTestBase {
   }
 
   test("meta json + schema validation") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "meta").toString
+    val root = withTempDir("meta")
     val df = Seq(("A", 1L, 1.0)).toDF("symbol", "bar_ts_ms", "close")
     Lake.writeMeta(df, root)
     val meta = new String(Files.readAllBytes(
@@ -143,8 +139,7 @@ class AsOfLakeSpec extends SparkTestBase {
   }
 
   test("migrate: column rename refreshes meta; concat keep-last honors input order") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "migrate").toString
+    val root = withTempDir("migrate")
 
     // rename_ts_col_v1 semantics: guard both KO paths, rewrite, refresh meta
     val src = s"$root/src"; val dst = s"$root/dst"
@@ -181,8 +176,7 @@ class AsOfLakeSpec extends SparkTestBase {
   }
 
   test("verifyAll: healthy lake all-ok; corruption flips the right checks") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "verify-lake").toString
+    val root = withTempDir("verify-lake")
     val bars = Seq(
       ("A", 1704067200000L, 1.0), ("A", 1704067260000L, 2.0),
       ("B", 1704067200000L, 3.0))

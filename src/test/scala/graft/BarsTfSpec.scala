@@ -88,8 +88,7 @@ class BarsTfSpec extends SparkTestBase {
   }
 
   test("binance kline CSV ingestion feeds the tf pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "csv").toString
+    val dir = withTempDir("csv")
     val rows = (0 until 4).map { i =>
       s"${i * 60000L},10.0,12.0,9.0,11.0,100.0,${i * 60000L + 59999},1000.0,5,50.0,500.0"
     } :+ "garbage,row,should,be,dropped"

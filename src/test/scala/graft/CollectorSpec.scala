@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.functions._
@@ -29,7 +27,7 @@ class CollectorSpec extends SparkTestBase {
   }
 
   private def tmpRoot(tag: String): String =
-    Files.createTempDirectory(java.nio.file.Paths.get("target"), tag).toString
+    withTempDir(tag)
 
   // 120 minutes of data starting 2024-01-01T00:00Z
   private val t0 = 1704067200000L

@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Cluster
 
@@ -38,7 +37,7 @@ object FaultInjector {
   * Suites run sequentially in the forked test JVM, so stopping the shared
   * session here is safe — the next suite's getOrCreate builds a fresh
   * one. */
-class FaultToleranceSpec extends AnyFunSuite {
+class FaultToleranceSpec extends SparkTestBase {
 
   test("reliable CC survives injected task failures with identical labels") {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
@@ -49,8 +48,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
-      val ckptDir = Files.createTempDirectory(
-        Paths.get("target"), "ckpt-cc").toString
+      val ckptDir = withTempDir("ckpt-cc")
       spark.sparkContext.setCheckpointDir(ckptDir)
 
       // 100 chains of 10 vertices: expected cluster label = block min
@@ -96,8 +94,7 @@ class FaultToleranceSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     try {
       import spark.implicits._
-      val ckptDir = Files.createTempDirectory(
-        Paths.get("target"), "ckpt-capstone").toString
+      val ckptDir = withTempDir("ckpt-capstone")
       spark.sparkContext.setCheckpointDir(ckptDir)
 
       // (1) the REAL embedding capstone, boundary=local vs boundary=

@@ -11,7 +11,7 @@ class HarnessSpec extends SparkTestBase {
   }
 
   test("Verify main writes one dir per query plus parseable oracle json") {
-    val out = Files.createTempDirectory(Paths.get("target"), "verify").toString
+    val out = withTempDir("verify")
     Verify.main(Array(sfDir, out))
     val entries = new java.io.File(out).list().toSet
     SparkEntry.queries.keySet.foreach { q =>

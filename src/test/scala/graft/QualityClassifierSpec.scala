@@ -75,7 +75,7 @@ class QualityClassifierSpec extends SparkTestBase {
     val maxDiff = mllib.keys.map(k => math.abs(mllib(k) - served(k))).max
     assert(maxDiff < 1e-9, s"serving drift $maxDiff")
     // the serving column is stateless: identical through a real stream
-    val dir = java.nio.file.Files.createTempDirectory("qserve").toString
+    val dir = withTempDir("qserve")
     corpus.write.mode("overwrite").parquet(dir)
     val src = spark.readStream.schema(corpus.schema).parquet(dir)
     QualityClassifier.scoreStateless(src, b, w)

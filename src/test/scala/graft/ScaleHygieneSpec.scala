@@ -158,8 +158,7 @@ class ScaleHygieneSpec extends SparkTestBase {
     // streaming loop: three micro-batches through nearDupBatch — zero
     // persisted blocks after EACH batch (this is the path a long-running
     // stream exercises once per micro-batch, forever)
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "neardup-hygiene").toString
+    val root = withTempDir("neardup-hygiene")
     Seq(wave(1, 20) -> 0L, wave(21, 40) -> 1L, wave(41, 60) -> 2L)
       .foreach { case (b, id) =>
         assert(graft.streaming.Ingest.nearDupBatch(b, id, root, threshold = 0.3))
@@ -169,6 +168,15 @@ class ScaleHygieneSpec extends SparkTestBase {
     // the loop still deduped across batches while staying clean
     val dec = spark.read.parquet(s"$root/decisions")
     assert(dec.where(col("status") === "dup_of_index").count() > 0)
+    // a micro-batch whose decisions write fails (`decisions` is a plain
+    // file) still releases its decision blocks — otherwise every
+    // foreachBatch retry would pin another set for the session's lifetime
+    val broken = withTempDir("neardup-failed")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(broken, "decisions"))
+    intercept[Exception](
+      graft.streaming.Ingest.nearDupBatch(wave(1, 20), 0L, broken, threshold = 0.3))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "a failed micro-batch left persisted blocks")
   }
 
   test("connected components: 200-vertex chain converges within 20 rounds") {

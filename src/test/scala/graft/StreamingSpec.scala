@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -16,10 +15,8 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[(Long, Timestamp, String, Double)]
     val ticks = input.toDF().toDF("event_id", "ts", "event_type", "value")
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-lake").toString
-    val ckpt = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-ckpt").toString
+    val root = withTempDir("stream-lake")
+    val ckpt = withTempDir("stream-ckpt")
     val q = Ingest.toLake(Ingest.minuteBars(ticks, "2 minutes"), root, ckpt).start()
 
     input.addData(
@@ -141,10 +138,8 @@ class StreamingSpec extends SparkTestBase {
     val input = MemoryStream[(Long, Timestamp, String, Double)]
     def ticksDf = input.toDF().toDF("event_id", "ts", "event_type", "value")
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-recover-lake").toString
-    val ckpt = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-recover-ckpt").toString
+    val root = withTempDir("stream-recover-lake")
+    val ckpt = withTempDir("stream-recover-ckpt")
 
     // run 1: two minutes of ticks commit to the lake, then the query stops
     // (deploy/crash); offsets + sink manifest live in the checkpoint
@@ -368,8 +363,7 @@ class StreamingSpec extends SparkTestBase {
       (3L, leaked),
       (4L, (1 to 20).map(i => s"other$i").mkString(" ")))
     val benchmark = Seq((100L, leaked)).toDF("doc_id", "text")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("scrub_stream").toString
+    val outDir = withTempDir("scrub_stream")
     def stage(df: org.apache.spark.sql.DataFrame) =
       graft.llm.Dedup.contaminationScrub(df, benchmark, n = 8)
 
@@ -647,8 +641,7 @@ class StreamingSpec extends SparkTestBase {
     val allDocs = (0 until 40).map(i =>
       (i.toLong, ("tok " * (i % 5 + 1)).trim))
 
-    val streamRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "stream-shards").toString
+    val streamRoot = withTempDir("stream-shards")
     val input = MemoryStream[(Long, String)]
     val q = Ingest.shardWriter(input.toDF().toDF("doc_id", "text"),
         streamRoot, tokensPerPack = 6L, nShards = 4).start()
@@ -657,8 +650,7 @@ class StreamingSpec extends SparkTestBase {
     q.processAllAvailable()
     q.stop()
 
-    val batchRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "batch-shards").toString
+    val batchRoot = withTempDir("batch-shards")
     graft.sources.Lake.writeShards(graft.llm.TextAnalysis.packShards(
       allDocs.toDF("doc_id", "text"), tokensPerPack = 6L, nShards = 4),
       batchRoot)
@@ -733,8 +725,7 @@ class StreamingSpec extends SparkTestBase {
     val wave2 = (0L until 10L).map(i => mkDoc(i, drop = 2))
       .map { case (i, t) => (i + 1000, t) } ++ (100L until 110L).map(mkDoc(_))
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "neardup-ix").toString
+    val root = withTempDir("neardup-ix")
     val input = MemoryStream[(Long, String)]
     val q = Ingest.nearDupWriter(input.toDF().toDF("doc_id", "text"),
         root, threshold = 0.3).start()
@@ -819,10 +810,8 @@ class StreamingSpec extends SparkTestBase {
     val waves = Seq(wave1, wave2, wave3)
 
     // reference: the same three waves through the plain (uncompacted) loop
-    val plainRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "neardup-plain").toString
-    val compactRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "neardup-compact").toString
+    val plainRoot = withTempDir("neardup-plain")
+    val compactRoot = withTempDir("neardup-compact")
     waves.zipWithIndex.foreach { case (w, i) =>
       assert(Ingest.nearDupBatch(w.toDF("doc_id", "text"), i.toLong,
         plainRoot, threshold = 0.3))
@@ -882,8 +871,7 @@ class StreamingSpec extends SparkTestBase {
       (11L, "m1 m2 a b c m3 m4"),     // caught ONLY via the index
       (12L, "u1 u2 u3 u4 u5 u6"))
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "trim-ix").toString
+    val root = withTempDir("trim-ix")
     val input = MemoryStream[(Long, String)]
     val q = Ingest.repeatedTrimWriter(input.toDF().toDF("doc_id", "text"),
         root, n = 3, minCount = 2).start()
@@ -951,8 +939,7 @@ class StreamingSpec extends SparkTestBase {
       (11L, "ee ff. ii jj"),          // caught ONLY via the index
       (12L, "kk ll. kk ll"))          // within-doc repeat
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "span-ix").toString
+    val root = withTempDir("span-ix")
     val input = MemoryStream[(Long, String)]
     val q = Ingest.spanDedupWriter(input.toDF().toDF("doc_id", "text"),
         root).start()
@@ -1013,8 +1000,7 @@ class StreamingSpec extends SparkTestBase {
       (12L, "https://b.com/q?utm_source=z", 99.0),   // improves
       (13L, "https://c.com/r", 7.0))                 // new address
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "url-ix").toString
+    val root = withTempDir("url-ix")
     val input = MemoryStream[(Long, String, Double)]
     val q = Ingest.urlDedupWriter(
       input.toDF().toDF("doc_id", "url", "quality"), root).start()
@@ -1072,8 +1058,7 @@ class StreamingSpec extends SparkTestBase {
         (22L, "https://c.com/r", 7.0)))
 
     def runStream(compactEvery: Int): String = {
-      val root = Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), s"url-cx$compactEvery").toString
+      val root = withTempDir(s"url-cx$compactEvery")
       val input = MemoryStream[(Long, String, Double)]
       val q = Ingest.urlDedupWriter(
         input.toDF().toDF("doc_id", "url", "quality"), root,
@@ -1165,8 +1150,7 @@ class StreamingSpec extends SparkTestBase {
       (12L, "completely different payload bytes " * 14),
       (13L, ""))
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "perc-ix").toString
+    val root = withTempDir("perc-ix")
     val input = MemoryStream[(Long, String)]
     val q = Ingest.perceptualDedupWriter(
       input.toDF().toDF("doc_id", "text")
@@ -1226,8 +1210,7 @@ class StreamingSpec extends SparkTestBase {
       Seq((4L, "B", "t3 three"), (5L, "B", "t5 five"), (6L, "C", "t7 seven")),
       Seq((7L, "A", "t4 four"), (8L, "B", "t4 four"), (9L, "C", "t8 eight")))
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "overlap-card").toString
+    val root = withTempDir("overlap-card")
     val input = MemoryStream[(Long, String, String)]
     val q = Ingest.overlapCardWriter(
       input.toDF().toDF("doc_id", "source", "text"), root, k = 16).start()
@@ -1291,8 +1274,7 @@ class StreamingSpec extends SparkTestBase {
       (20L, Seq(0.0, 0.0, 2.0, 0.0)),  // dup_of_index (12, cross-batch)
       (21L, Seq(1.0, 1.0, 0.0, 0.0)))  // cos .707 to anchors → accepted
 
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sem-ix").toString
+    val root = withTempDir("sem-ix")
     val input = MemoryStream[(Long, Seq[Double])]
     val q = Ingest.semanticDedupWriter(
       input.toDF().toDF("vec_id", "embedding"), root, k = 2, tau = 0.95,
@@ -1358,8 +1340,7 @@ class StreamingSpec extends SparkTestBase {
     // an EMPTY first batch (streams can open with one) commits as a
     // no-op without freezing a vacuous codebook; the first non-empty
     // batch bootstraps normally
-    val root2 = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sem-ix2").toString
+    val root2 = withTempDir("sem-ix2")
     assert(Ingest.semanticDedupBatch(df(w1).limit(0), 0L, root2, k = 2))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(
       root2, "_codebook_mark/stream")))
@@ -1392,8 +1373,7 @@ class StreamingSpec extends SparkTestBase {
     // own-commitId crash residue (codebook written, mark lost) stays
     // self-healing: the deterministic trainer rewrites the identical
     // codebook from the replayed batch instead of wedging the stream
-    val root3 = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sem-ix3").toString
+    val root3 = withTempDir("sem-ix3")
     assert(Ingest.semanticDedupBatch(df(w1), 0L, root3, k = 2))
     val cb3 = spark.read.parquet(s"$root3/codebook").orderBy("cell")
       .collect().map(_.getSeq[Double](1).toArray)
@@ -1421,10 +1401,8 @@ class StreamingSpec extends SparkTestBase {
         (b * 10L + 2, "B", s"tok${math.max(b - 1, 0)} alpha shared phrase"),
         (b * 10L + 3, if (b % 2 == 0) "A" else "C", s"solo$b gamma delta"))
     }
-    val plainRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ovl-plain").toString
-    val compactRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ovl-compact").toString
+    val plainRoot = withTempDir("ovl-plain")
+    val compactRoot = withTempDir("ovl-compact")
     waves.zipWithIndex.foreach { case (w, i) =>
       val df = w.toDF("doc_id", "source", "text")
       assert(Ingest.overlapCardBatch(df, i.toLong, plainRoot, k = 16))
@@ -1488,10 +1466,8 @@ class StreamingSpec extends SparkTestBase {
       Seq((21L, "x2 y2 z2 q2")),
       Seq((31L, "x3 y3 z3 q3")),
       Seq((41L, s"m4 n4 $phrase o4"), (42L, "x4 y4 z4 q4")))
-    val plainRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "trim-plain").toString
-    val compactRoot = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "trim-compact").toString
+    val plainRoot = withTempDir("trim-plain")
+    val compactRoot = withTempDir("trim-compact")
     waves.zipWithIndex.foreach { case (w, i) =>
       val df = w.toDF("doc_id", "text")
       assert(Ingest.repeatedTrimBatch(df, i.toLong, plainRoot,
@@ -1534,5 +1510,111 @@ class StreamingSpec extends SparkTestBase {
         plainRoot, "gram_index")).map(_.getPath.getName)
       .count(_.startsWith("batch_id="))
     assert(plainDirs == waves.length)
+  }
+
+  test("every commit-protocol loop: a committed id writes nothing, and a " +
+      "crash between a batch's first output and its marker replays to the " +
+      "identical state tree") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Path, Paths}
+    import org.apache.spark.sql.DataFrame
+
+    def docs(w: Seq[(Long, String)]) = w.toDF("doc_id", "text")
+    def mkDoc(i: Long, drop: Int = 0): (Long, String) =
+      (i, (0 until 12 - drop).map(j => s"w${(i * 7 + j * 13) % 97}")
+        .mkString(" "))
+    def fresh(i: Long) = (i, (0 until 12).map(j => s"v${i}x$j").mkString(" "))
+    val img = "the quick brown fox jumps over the lazy dog " * 12
+    def payloads(w: Seq[(Long, String)]) = docs(w)
+      .select(col("doc_id"), encode(col("text"), "utf-8").as("payload"))
+    // (loop, the output a batch writes first — the crash keeps it —, three
+    // input batches, one batch call). writeShardBatch's one write is an
+    // append committed as one job, so its crash before the marker loses
+    // the whole batch.
+    type Run = (DataFrame, Long, String, Int) => Boolean
+    val loops: Seq[(String, Option[String], Seq[DataFrame], Run)] = Seq(
+      ("nearDup", Some("decisions"), Seq((0L until 12L).map(mkDoc(_)),
+          (0L until 4L).map(i => (i + 1000, mkDoc(i, drop = 2)._2)) ++
+            (100L until 104L).map(fresh),
+          (2005L, mkDoc(5)._2) +: (200L until 203L).map(fresh)).map(docs),
+        (b, id, root, ce) =>
+          Ingest.nearDupBatch(b, id, root, threshold = 0.3, compactEvery = ce)),
+      ("perceptualDedup", Some("decisions"), Seq(
+          Seq((1L, img), (2L, img + "second image payload here")),
+          Seq((11L, img.updated(5, 'Q').updated(200, 'x')),
+            (12L, "completely different payload bytes " * 14)),
+          Seq((21L, img.updated(9, 'Z')), (22L, "another payload " * 20),
+            (23L, ""))).map(payloads),
+        (b, id, root, ce) =>
+          Ingest.perceptualDedupBatch(b, id, root, compactEvery = ce)),
+      ("semanticDedup", Some("decisions"), Seq(
+          Seq((1L, Seq(1.0, 0.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0, 0.0)),
+            (3L, Seq(2.0, 0.0, 0.0, 0.0))),
+          Seq((10L, Seq(3.0, 0.0, 0.0, 0.0)), (12L, Seq(0.0, 0.0, 1.0, 0.0)),
+            (13L, Seq(0.0, 0.0, 0.9, -0.1))),
+          Seq((20L, Seq(0.0, 0.0, 2.0, 0.0)), (21L, Seq(1.0, 1.0, 0.0, 0.0))))
+          .map(_.toDF("vec_id", "embedding")),
+        (b, id, root, ce) =>
+          Ingest.semanticDedupBatch(b, id, root, k = 2, compactEvery = ce)),
+      ("repeatedTrim", Some("trimmed"), Seq(
+          Seq((1L, "a b c d e f g h"), (2L, "z1 z2 a b c z3 z4 z5")),
+          Seq((11L, "m1 m2 a b c m3 m4"), (12L, "u1 u2 u3 u4 u5 u6")),
+          Seq((21L, "u1 u2 u3 v1 v2"), (22L, "a b c d e"))).map(docs),
+        (b, id, root, ce) =>
+          Ingest.repeatedTrimBatch(b, id, root, n = 3, compactEvery = ce)),
+      ("spanDedup", Some("deduped"), Seq(
+          Seq((1L, "aa bb. cc dd. ee ff"), (2L, "cc dd. gg hh")),
+          Seq((11L, "ee ff. ii jj"), (12L, "kk ll. kk ll")),
+          Seq((21L, "ii jj. mm nn"), (22L, "oo pp"))).map(docs),
+        (b, id, root, ce) =>
+          Ingest.spanDedupBatch(b, id, root, compactEvery = ce)),
+      ("urlDedup", Some("decisions"), Seq(
+          Seq((1L, "https://a.com/p", 10.0), (2L, "https://a.com/p/", 30.0)),
+          Seq((11L, "HTTPS://A.com/p#x", 25.0), (12L, "https://b.com/q", 9.0)),
+          Seq((21L, "https://b.com/q?utm_source=z", 99.0),
+            (22L, "https://c.com/r", 7.0)))
+          .map(_.toDF("doc_id", "url", "quality")),
+        (b, id, root, ce) =>
+          Ingest.urlDedupBatch(b, id, root, compactEvery = ce)),
+      ("overlapCard", Some("state"), Seq(
+          Seq((1L, "A", "t1 one"), (2L, "A", "t3 three")),
+          Seq((4L, "B", "t3 three"), (6L, "C", "t7 seven")),
+          Seq((7L, "A", "t4 four"), (8L, "B", "t4 four")))
+          .map(_.toDF("doc_id", "source", "text")),
+        (b, id, root, ce) =>
+          Ingest.overlapCardBatch(b, id, root, k = 16, compactEvery = ce)),
+      ("writeShard", None, Seq(0L until 8L, 8L until 14L, 14L until 20L)
+          .map(r => docs(r.map(i => (i, ("tok " * (i % 5 + 1).toInt).trim)))),
+        (b, id, root, _) => Ingest.writeShardBatch(b, id, root,
+          tokensPerPack = 6L, nShards = 4)))
+
+    def paths(root: String): Set[Path] =
+      Files.walk(Paths.get(root)).iterator().asScala.toSet
+    for ((name, first, batches, run) <- loops; compactEvery <- Seq(0, 2)) {
+      val what = s"$name compactEvery=$compactEvery"
+      val root = withTempDir(s"commit-$name")
+      val last = batches.length - 1L
+      batches.init.zipWithIndex.foreach { case (b, id) =>
+        assert(run(b, id.toLong, root, compactEvery), what)
+      }
+      val before = paths(root)
+      assert(run(batches.last, last, root, compactEvery), what)
+      val committed = stateDigest(root)
+      // (a) every committed id is skipped and writes nothing
+      batches.zipWithIndex.foreach { case (b, id) =>
+        assert(!run(b, id.toLong, root, compactEvery), s"$what: id $id re-ran")
+      }
+      assert(stateDigest(root) == committed, s"$what: a skipped id wrote")
+      // (b) crash after the last batch's first output: everything else it
+      // added (its marker, its other output) is gone; the replay must
+      // reproduce the committed tree
+      (paths(root) -- before)
+        .filterNot(p => first.exists(f => p.startsWith(Paths.get(root, f))))
+        .toSeq.sortBy(-_.getNameCount).foreach(p => Files.delete(p))
+      assert(run(batches.last, last, root, compactEvery), s"$what: no replay")
+      assert(stateDigest(root) == committed, s"$what: replay diverged")
+      info(s"stateDigest $what ${md5Hex(committed.mkString("\n"))}")
+    }
   }
 }
