@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory: every entry point (Verify, Bench, tests) builds through
   * here so plan-shaping configs are uniform.
@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *   recommend false for production, but size-based coalescing targets
   *   BYTES while this engine's hot operators are compute-dense per byte
   *   (regex/backtest scans, connected-components rounds, fingerprint
-  *   joins). Round-13's PerfLab A/B (count()-consumed) measured false
+  *   joins). Round-13's paired A/B (count()-consumed) measured false
   *   9-16% worse on the compute-dense keys; re-measured in round 14
   *   under the honest full-plan shape (noop write — projections + final
   *   sort execute), the penalty is smaller and MIXED per key
@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   *   case where size-based coalescing pays (post-shuffle partitions far
   *   above the 64 MB advisory), and under-parallelizing CPU-bound
   *   stages is the asymmetric risk on a 32-core box; a cluster deploy
-  *   at real bytes/partition should re-run graft.PerfLab and decide on
-  *   its own data
+  *   at real bytes/partition should repeat that paired noop-write A/B
+  *   on its own data and decide there
   * - nanosAsLong: the testdata's TIMESTAMP(NANOS) columns surface as LONG
   *   (see [[graft.sources.Tables]])
   * - UTC session timezone: bar bucketing must be timezone-stable
@@ -56,6 +56,55 @@ object GraftSession {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
   }
+
+  /** Session conf key that picks how pipeline stage boundaries
+    * materialize: `local` (default), `reliable` or `none` — see
+    * [[stageBoundary]]. Also decides whether [[graft.llm.Cluster]]'s
+    * per-round pins are durable. */
+  private val StageBoundaryConf = "graft.stage.boundary"
+
+  /** The session's validated stage-boundary mode; `reliable` needs
+    * `spark.sparkContext`'s checkpoint directory to be set. */
+  private[graft] def stageBoundaryMode(spark: SparkSession): String =
+    spark.conf.get(StageBoundaryConf, "local") match {
+      case m @ ("local" | "none") => m
+      case "reliable" =>
+        require(spark.sparkContext.getCheckpointDir.isDefined,
+          s"$StageBoundaryConf=reliable requires " +
+            "spark.sparkContext.setCheckpointDir(...)")
+        "reliable"
+      case other => throw new IllegalArgumentException(
+        s"$StageBoundaryConf must be local|reliable|none, got '$other'")
+    }
+
+  /** Capstone stage-boundary materialization, parameterized by
+    * [[stageBoundaryMode]] so one code path serves both the bench box and
+    * a real cluster:
+    *
+    *  - `local` (default): eager `localCheckpoint` — fastest, but blocks
+    *    are UNREPLICATED executor-local storage, so on a multi-executor
+    *    cluster one executor loss mid-capstone fails the job and the
+    *    truncated lineage cannot recompute. The right trade at local[32]
+    *    and for minutes-long runs.
+    *  - `reliable`: eager reliable `checkpoint` into
+    *    `spark.sparkContext`'s checkpoint directory (must be set) — the
+    *    cluster-durable stage write every published pipeline performs
+    *    between its per-doc prefix and cross-doc suffix; survives
+    *    executor loss, tasks retry from the checkpoint files
+    *    (FaultToleranceSpec injects first-attempt task failures through
+    *    a reliable-boundary capstone and pins identical output).
+    *  - `none`: passthrough — plan-shape A/Bs and debugging.
+    *
+    * At 100 TB the `reliable` files land on the cluster's checkpoint
+    * store (HDFS/object store) exactly like the lake-materialized stage
+    * dirs the streaming loops write — same durability class, chosen by
+    * conf instead of a code fork. */
+  private[graft] def stageBoundary(df: DataFrame): DataFrame =
+    stageBoundaryMode(df.sparkSession) match {
+      case "local" => df.localCheckpoint(true)
+      case "reliable" => df.checkpoint(eager = true)
+      case _ => df
+    }
 
   def local(appName: String = "graft", cores: String = "32"): SparkSession = {
     val s = configure(SparkSession.builder().appName(appName).master(s"local[$cores]"), cores)

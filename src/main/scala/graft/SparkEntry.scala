@@ -80,44 +80,9 @@ object SparkEntry {
         .otherwise(""))
   }
 
-  /** Capstone stage-boundary materialization, parameterized by the
-    * session conf `graft.stage.boundary` so one code path serves both the
-    * bench box and a real cluster:
-    *
-    *  - `local` (default): eager `localCheckpoint` — fastest, but blocks
-    *    are UNREPLICATED executor-local storage, so on a multi-executor
-    *    cluster one executor loss mid-capstone fails the job and the
-    *    truncated lineage cannot recompute. The right trade at local[32]
-    *    and for minutes-long runs.
-    *  - `reliable`: eager reliable `checkpoint` into
-    *    `spark.sparkContext`'s checkpoint directory (must be set) — the
-    *    cluster-durable stage write every published pipeline performs
-    *    between its per-doc prefix and cross-doc suffix; survives
-    *    executor loss, tasks retry from the checkpoint files
-    *    (FaultToleranceSpec injects first-attempt task failures through
-    *    a reliable-boundary capstone and pins identical output).
-    *  - `none`: passthrough — plan-shape A/Bs and debugging.
-    *
-    * At 100 TB the `reliable` files land on the cluster's checkpoint
-    * store (HDFS/object store) exactly like the lake-materialized stage
-    * dirs the streaming loops write — same durability class, chosen by
-    * conf instead of a code fork. */
-  private[graft] def stageBoundary(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("graft.stage.boundary", "local") match {
-      case "local" => df.localCheckpoint(true)
-      case "reliable" =>
-        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "graft.stage.boundary=reliable requires " +
-            "spark.sparkContext.setCheckpointDir(...)")
-        df.checkpoint(eager = true)
-      case "none" => df
-      case other => throw new IllegalArgumentException(
-        s"graft.stage.boundary must be local|reliable|none, got '$other'")
-    }
-
-  /** Chained-call form of [[stageBoundary]]. */
+  /** Chained-call form of [[GraftSession.stageBoundary]]. */
   private[graft] implicit class StageBoundaryOps(df: DataFrame) {
-    def stagePin(): DataFrame = stageBoundary(df)
+    def stagePin(): DataFrame = GraftSession.stageBoundary(df)
   }
 
   /** embeddings ∪ seeded near-dups (every 5th vector, position-dependent
@@ -2307,8 +2272,8 @@ object SparkEntry {
       // exchange reuse already dedupes its EXECUTION, but the replicated
       // subtree made this the repo's largest static plan (698 nodes, 42
       // winnow copies) and every AQE round re-processed it; the pin
-      // truncates the plan (191k -> ~30k chars). OptProbe
-      // winnow_inc_pin_ab: ~-0.6 s/key at sf0.1 (paired, warm)
+      // truncates the plan (191k -> ~30k chars); paired warm A/B at
+      // sf0.1: ~-0.6 s/key (OPTIMIZATION_r18.md)
       Dedup.winnowCandidatesIncremental(batch, fpIndex,
           k = 3, w = 4, maxDf = 10, minShared = 2, pinBatchFp = true)
         .orderBy("doc_a", "doc_b")

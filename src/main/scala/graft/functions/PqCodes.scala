@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *
   * Why an Expression: encoding is the compute-dense inner loop of the PQ
   * compression pass — m·ksub sub-distances per row. The HOF composition
-  * (per-centroid struct + array_sort, kept as the reference formulation
-  * for the equivalence spec) builds and sorts m arrays of ksub structs
+  * (per-centroid struct + array_sort, kept in LlmSpec as the reference
+  * formulation for the equivalence pin) builds and sorts m arrays of ksub structs
   * per ROW in interpreted mode — measured 47 K vecs/s on 32 threads at
   * 64 dims vs 316 K vecs/s (54×) for this fused primitive loop, which
   * stays inside WholeStageCodegen and removes the allocation churn

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   *
   * At 100 TB a handful of symbols (or LSH buckets) can dominate a shuffle
   * partition. Where each technique actually applies — measured in
-  * [[graft.ScaleProbe]]'s seeded-skew section, numbers in BASELINE.md:
+  * `graft.ScaleProbe`'s seeded-skew section (a test-side dev main), numbers in BASELINE.md:
   *
   *  - **sum/count/min/max**: Spark's map-side partial aggregation already
   *    pre-combines to one row per key per map task, so the hot reducer

@@ -14,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (pos, hash, gram) triples in window order.
   *
   * Why native rather than the HOF formulation (kept as
-  * [[graft.llm.TextAnalysis.winnowFingerprintsHof]] for the equivalence
-  * test): Catalyst's CollapseProject inlines the gram-array expression
+  * `CurationOpsSpec.winnowFingerprintsHof` for the equivalence test):
+  * Catalyst's CollapseProject inlines the gram-array expression
   * into every `transform` lambda that references it, so the layered HOF
   * plan re-evaluates the FULL gram array once per gram index and once
   * per window — O(n³) per document (measured: 76 s for the sf0.01

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * dedups for set similarity). Texts with fewer than `n` tokens yield an
   * empty array (they contribute no n-grams to a frequency table).
   *
-  * Equivalent to the HOF formulation in [[graft.llm.TextAnalysis.ngrams]]
+  * Equivalent to the HOF formulation kept as `StatsSessionsSpec.ngramsHof`
   * (split → sliding concat_ws), which is CodegenFallback per LAMBDA per
   * element; this pays one virtual call per row instead.
   */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Dedup, MinHashLsh, Multimodal, SimHash, Similarity, TextAnalysis}
@@ -254,14 +255,14 @@ class LlmSpec extends SparkTestBase {
     ).toDF("doc_id", "text"))
     val diff = withEdge.select(
         Dedup.shingles(col("text"), 3).as("a"),
-        Dedup.shinglesHof(col("text"), 3).as("b"))
+        LlmSpec.shinglesHof(col("text"), 3).as("b"))
       .where(col("a") =!= col("b")).count()
     assert(diff == 0)
   }
 
   test("native simhash expression equals the HOF formulation bit-for-bit") {
     val diff = SimHash.withFingerprint(docs).select(col("doc_id"), col("simhash"))
-      .join(SimHash.withFingerprintHof(docs)
+      .join(LlmSpec.withFingerprintHof(docs)
         .select(col("doc_id"), col("simhash").as("hof")), "doc_id")
       .where(col("simhash") =!= col("hof")).count()
     assert(diff == 0)
@@ -336,7 +337,7 @@ class LlmSpec extends SparkTestBase {
     for (n <- Seq(1, 4, 8, 12)) { // 12 > nCells=8 exercises slice shortening
       val ab = vecs.select(
         Similarity.nearestCells(centers, col("_cv"), n).as("a"),
-        Similarity.nearestCellsTree(centers, col("_cv"), n).as("b"))
+        LlmSpec.nearestCellsTree(centers, col("_cv"), n).as("b"))
         .collect()
       ab.foreach { r =>
         assert(r.getSeq[Int](0) == r.getSeq[Int](1),
@@ -369,7 +370,7 @@ class LlmSpec extends SparkTestBase {
     for ((nPlanes, bands) <- Seq((16, 2), (16, 8), (8, 4))) {
       val a = Similarity.withLshBuckets(vecs, dim = 64, nPlanes, bands)
         .select("vec_id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
-      val b = Similarity.withLshBucketsTree(vecs, dim = 64, nPlanes, bands)
+      val b = LlmSpec.withLshBucketsTree(vecs, dim = 64, nPlanes, bands)
         .select("vec_id", "band", "bucket").as[(Long, Int, Long)].collect().toSet
       assert(a == b, s"nPlanes=$nPlanes bands=$bands: native " +
         s"diff ${(a -- b).take(3)} / tree diff ${(b -- a).take(3)}")
@@ -418,13 +419,13 @@ class LlmSpec extends SparkTestBase {
     val ra = bits(vecs.select(col("vec_id"),
       Similarity.rotateVec(col("embedding"), r).as("out")))
     val rb = bits(vecs.select(col("vec_id"),
-      Similarity.rotateVecTree(col("embedding"), r).as("out")))
+      LlmSpec.rotateVecTree(col("embedding"), r).as("out")))
     assert(ra == rb, s"rotate diff: ${ra.find(kv => rb.get(kv._1) != Some(kv._2)).take(1)}")
     for (outDim <- Seq(16, 32)) {
       val pa = bits(vecs.select(col("vec_id"),
         Similarity.projectVec(col("embedding"), 64, outDim).as("out")))
       val pb = bits(vecs.select(col("vec_id"),
-        Similarity.projectVecTree(col("embedding"), 64, outDim).as("out")))
+        LlmSpec.projectVecTree(col("embedding"), 64, outDim).as("out")))
       assert(pa == pb, s"project outDim=$outDim diff: " +
         s"${pa.find(kv => pb.get(kv._1) != Some(kv._2)).take(1)}")
     }
@@ -1312,7 +1313,7 @@ class LlmSpec extends SparkTestBase {
     val books = Similarity.pqCodebooks(sample, 64, 8, 16, seed = 7L)
     val both = emb.select(col("vec_id"),
       Similarity.pqEncode(col("embedding"), books, 64).as("native"),
-      Similarity.pqEncodeHof(col("embedding"), books, 64).as("hof"))
+      LlmSpec.pqEncodeHof(col("embedding"), books, 64).as("hof"))
     assert(both.where(not(col("native") === col("hof"))).count() == 0)
     assert(both.where(col("native").isNull).count() == 0)
   }
@@ -2066,4 +2067,123 @@ class LlmSpec extends SparkTestBase {
 
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+}
+
+/** Reference formulations of the native LLM expressions — literal
+  * expression trees and interpreted HOF lambdas — kept only for the
+  * native-vs-reference parity pins above (none is on a query path). */
+object LlmSpec {
+
+  /** Distinct word n-gram shingles, twin of [[Dedup.shingles]]. */
+  def shinglesHof(text: Column, n: Int = 3): Column = {
+    val toks = TextAnalysis.tokens(lower(text))
+    array_distinct(
+      when(size(toks) >= n,
+        transform(sequence(lit(0), size(toks) - n),
+          i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+        .otherwise(array(concat_ws(" ", toks))))
+  }
+
+  /** SimHash fingerprint, twin of [[SimHash.withFingerprint]] (checked
+    * bit-for-bit against [[graft.functions.SimHash64]]). Variable shift
+    * amounts need SQL-expression lambdas (the Scala DSL's shiftright
+    * takes a literal only). */
+  def withFingerprintHof(docs: DataFrame, textCol: String = "text"): DataFrame = {
+    val withToks = docs.withColumn("_toks", TextAnalysis.tokens(lower(col(textCol))))
+    val bitSums = expr(
+      """aggregate(
+        |  _toks,
+        |  array_repeat(0, 64),
+        |  (acc, t) -> zip_with(
+        |    acc,
+        |    transform(sequence(0, 63),
+        |      i -> CASE WHEN (shiftright(xxhash64(t), i) & 1) = 1
+        |           THEN 1 ELSE -1 END),
+        |    (x, y) -> x + y))""".stripMargin)
+    val fp = expr(
+      """aggregate(
+        |  zip_with(_bitsums, sequence(0, 63), (s, i) -> IF(s > 0, shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT))),
+        |  CAST(0 AS BIGINT),
+        |  (acc, v) -> acc | v)""".stripMargin)
+    withToks
+      .withColumn("_bitsums", bitSums)
+      .withColumn("simhash", fp)
+      .drop("_toks", "_bitsums")
+  }
+
+  /** Literal-hyperplane sign bits fed through per-band `xxhash64`, twin of
+    * [[Similarity.withLshBuckets]]. */
+  def withLshBucketsTree(df: DataFrame, dim: Int, nPlanes: Int = 16,
+                         bands: Int = 2, seed: Int = 7,
+                         vecCol: String = "embedding"): DataFrame = {
+    require(nPlanes % bands == 0)
+    val perBand = nPlanes / bands
+    val ps = Similarity.planesRaw(nPlanes, dim, seed).map(p => lit(p)).toIndexedSeq
+    val v = col(vecCol).cast("array<double>")
+    val signBits = ps.map(p =>
+      when(coalesce(Similarity.cosine(v, p), lit(0.0)) > 0.0, 1).otherwise(0))
+    val bandStructs = array((0 until bands).map { b =>
+      val chunk = signBits.slice(b * perBand, (b + 1) * perBand)
+      struct(lit(b).as("band"), xxhash64((lit(b) +: chunk): _*).as("bucket"))
+    }: _*)
+    df.withColumn("_b", explode(bandStructs))
+      .withColumn("band", col("_b.band"))
+      .withColumn("bucket", col("_b.bucket"))
+      .drop("_b")
+  }
+
+  /** Literal-centroid cosine structs through `array_sort`, twin of
+    * [[Similarity.nearestCells]]. */
+  def nearestCellsTree(centers: Array[Array[Double]], v: Column,
+                       n: Int): Column = {
+    val sims = array(centers.zipWithIndex.toIndexedSeq.map { case (c, i) =>
+      struct(coalesce(Similarity.cosine(v, lit(c)), lit(-2.0)).as("sim"),
+        lit(i).as("cell"))
+    }: _*)
+    slice(reverse(array_sort(sims)), 1, n).getField("cell")
+  }
+
+  /** Literal-matrix `zip_with`/`aggregate` multiply, twin of
+    * [[Similarity.projectVec]]. */
+  def projectVecTree(vec: Column, inDim: Int, outDim: Int,
+                     seed: String = "jl"): Column = {
+    val mLit = typedLit(Similarity.jlMatrix(inDim, outDim, seed))
+    val v = vec.cast("array<double>")
+    val scale = math.sqrt(outDim.toDouble)
+    transform(sequence(lit(0), lit(outDim - 1)), j =>
+      aggregate(zip_with(v, element_at(mLit, j + 1), (x, w) => x * w),
+        lit(0.0), (acc, t) => acc + t) / scale)
+  }
+
+  /** Literal-matrix multiply, twin of [[Similarity.rotateVec]]. */
+  def rotateVecTree(vec: Column, r: Seq[Seq[Double]]): Column = {
+    val mLit = typedLit(r)
+    val v = vec.cast("array<double>")
+    transform(sequence(lit(0), lit(r.size - 1)), j =>
+      aggregate(zip_with(v, element_at(mLit, j + 1), (x, w) => x * w),
+        lit(0.0), (acc, t) => acc + t))
+  }
+
+  /** Squared L2 distance between an array column and a literal centroid. */
+  private def sqDist(a: Column, c: Array[Double]): Column =
+    aggregate(zip_with(a, lit(c), (x, y) => (x - y) * (x - y)),
+      lit(0.0), (acc, t) => acc + t)
+
+  /** Per-centroid distance structs + `array_sort` argmin, twin of
+    * [[Similarity.pqEncode]]. */
+  def pqEncodeHof(vec: Column, books: Array[Array[Array[Double]]],
+                  inDim: Int): Column = {
+    val m = books.length
+    val sub = inDim / m
+    val v = vec.cast("array<double>")
+    val codes = (0 until m).map { j =>
+      val sv = slice(v, j * sub + 1, sub)
+      val ds = array(books(j).zipWithIndex.toIndexedSeq.map { case (c, i) =>
+        struct(coalesce(sqDist(sv, c), lit(Double.MaxValue)).as("d"),
+          lit(i).as("code"))
+      }: _*)
+      element_at(array_sort(ds), 1).getField("code")
+    }
+    array(codes: _*)
+  }
 }

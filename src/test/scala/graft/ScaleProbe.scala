@@ -11,7 +11,7 @@ import graft.operators.{AsOf, Backtest, Canonical, Gaps, LowPlus, Sessions, Stat
   * prices) and times the core operators, printing one JSON line with
   * rows/sec per operator. Used to validate that plans hold their shape and
   * throughput at 100-1000x the bench scale factor; results summarized in
-  * BASELINE.md.
+  * BASELINE.md. Run with `sbt "Test/runMain graft.ScaleProbe [n]"`.
   */
 object ScaleProbe {
 
@@ -29,26 +29,29 @@ object ScaleProbe {
       : (String, Double) = {
     val dir = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), s"probe-$name").toString
-    input.write.mode("overwrite").parquet(dir)
-    val sch = spark.read.parquet(dir).schema
-    val t0 = System.nanoTime()
-    val src = spark.readStream.schema(sch)
-      .option("maxFilesPerTrigger", "8").parquet(dir)
-    val q = mk(src).writeStream.format("noop")
-      .option("checkpointLocation", s"$dir-ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sec = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] $name: $sec%.1f s, $sn input rows, ${sn / sec / 1e6}%.1f M input rows/s")
-    name -> (sn / sec)
+    try {
+      input.write.mode("overwrite").parquet(dir)
+      val sch = spark.read.parquet(dir).schema
+      val t0 = System.nanoTime()
+      val src = spark.readStream.schema(sch)
+        .option("maxFilesPerTrigger", "8").parquet(dir)
+      val q = mk(src).writeStream.format("noop")
+        .option("checkpointLocation", s"$dir-ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val sec = (System.nanoTime() - t0) / 1e9
+      println(f"[probe] $name: $sec%.1f s, $sn input rows, ${sn / sec / 1e6}%.1f M input rows/s")
+      name -> (sn / sec)
+    } finally Seq(dir, s"$dir-ckpt").foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   def main(args: Array[String]): Unit = {
     val n = args.find(_.forall(_.isDigit)).map(_.toLong).getOrElse(20000000L)
     val spark = GraftSession.local("scale-probe")
     import spark.implicits._
-    // dev: `runMain graft.ScaleProbe hotcell [n]` isolates the SemDeDup
+    // dev: `Test/runMain graft.ScaleProbe hotcell [n]` isolates the SemDeDup
     // hot-cell block (its numbers are contention-sensitive; the full-suite
     // tail position would otherwise measure the other probes' residue)
     if (args.contains("hotcell")) {
@@ -58,7 +61,7 @@ object ScaleProbe {
       spark.stop()
       return
     }
-    // dev: `runMain graft.ScaleProbe election [n]` isolates the keep-best
+    // dev: `Test/runMain graft.ScaleProbe election [n]` isolates the keep-best
     // election A/B (packed DECIMAL HashAggregate vs struct SortAggregate)
     if (args.contains("election")) {
       val res = electionProbe(spark, n)
@@ -898,7 +901,7 @@ object ScaleProbe {
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     val reps = 3
     val pairs = (0 until reps).map { _ =>
-      val s = run(graft.llm.Dedup.urlKeepBestStructRef(
+      val s = run(graft.llm.Dedup.urlKeepBestFullRange(
         docs, col("url"), col("quality")))
       val p = run(graft.llm.Dedup.urlKeepBest(
         docs, col("url"), col("quality")))

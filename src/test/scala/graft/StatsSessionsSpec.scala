@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -156,7 +157,7 @@ class StatsSessionsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val both = docs.select(
       TextAnalysis.ngrams(col("text"), 2).as("native"),
-      TextAnalysis.ngramsHof(col("text"), 2).as("hof"))
+      StatsSessionsSpec.ngramsHof(col("text"), 2).as("hof"))
     assert(both.where(not(col("native") === col("hof"))).count() === 0L)
   }
 
@@ -176,5 +177,18 @@ class StatsSessionsSpec extends SparkTestBase {
     val joined = out.join(meta, "doc_id")
       .where(col("hist_sum") =!= col("n_bytes"))
     assert(joined.count() === 0L)
+  }
+}
+
+object StatsSessionsSpec {
+
+  /** HOF reference formulation of [[TextAnalysis.ngrams]], kept for the
+    * native/HOF equivalence test. */
+  def ngramsHof(text: Column, n: Int): Column = {
+    val toks = TextAnalysis.tokens(lower(text))
+    when(size(toks) >= n,
+      transform(sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
+      .otherwise(array().cast("array<string>"))
   }
 }
